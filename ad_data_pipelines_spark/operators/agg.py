@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ad_data_pipelines_spark.sources.local import local_frame
+
 
 def count_if(cond: Column) -> Column:
     """Conditional count in one aggregation pass (A2).
@@ -902,7 +904,8 @@ def _ntile_shards(
     # shard cuts on the first column, a single-value shard on the
     # second's monotone double
     on_second = {s: src == "s" for s, src in split_src.items()}
-    bounds = df.sparkSession.createDataFrame(
+    bounds = local_frame(
+        df.sparkSession,
         [(s, bool(on_second[s]), e) for s, e in edges.items()],
         "__shard bigint, __on_second boolean, __edges array<double>",
     )
@@ -1001,8 +1004,10 @@ def distributed_ntile(
     for s, c in sorted(counts):
         rows.append((s, off, total))
         off += c
-    offsets = df.sparkSession.createDataFrame(
-        rows, "__shard bigint, __sh_off bigint, __n_total bigint"
+    offsets = local_frame(
+        df.sparkSession,
+        rows,
+        "__shard bigint, __sh_off bigint, __n_total bigint",
     )
     w_in = Window.partitionBy("__shard").orderBy(*order_by)
     ranked = (

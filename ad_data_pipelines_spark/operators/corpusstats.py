@@ -58,18 +58,20 @@ def cooccurrence_pmi(
     p(w) = tokens/total_tokens; `min_pair` floors the count so rare
     coincidences can't dominate the top of the report.
 
-    The corpus text is parsed exactly TWICE (one pair explode, one
-    token explode — r15): both count tables are localCheckpointed
-    (they are the aggregates, vocabulary-sized, never text), the
-    unigram table feeds its two join legs from the cut, and BOTH
-    scalar totals are integer identities over the count tables
-    (Σ n_pair = total pair slots, Σ cw = total tokens) instead of a
-    third corpus-parsing scan. The measured before-plan ran 4 parquet
-    scans / 3 explodes for one corpus (the unigram subtree executed
-    once per join leg — ReusedExchange does not unify aggregate
-    subtrees under AQE). The cut blocks are reclaimed by the
-    ContextCleaner once the frames go out of scope (the session's
-    periodic-GC setting covers long sessions).
+    Only the vocabulary-sized unigram table `cu` is localCheckpointed:
+    it feeds two join legs (the unigram subtree otherwise executes once
+    per leg — ReusedExchange does not unify aggregate subtrees under
+    AQE) and the token total Σ cw. The pair counts `cp` are
+    pair-sized (up to |vocab|² × window rows), so they stream straight
+    into `scored` and never sit in unreplicated, lineage-free storage.
+    The pair total comes from a narrow aggregate over array sizes,
+    Σ_docs Σ_j max(n-j, 0) — the same integer as Σ n_pair over the
+    unfiltered pair counts, with no Generate and only a 1-row combine.
+    localCheckpoint, not persist: CacheManager matches persists by
+    canonicalized plan, so a persisted count table would silently
+    serve CACHED results to a later identical call (e.g. the bench's
+    n=3 loop); the cut blocks are reclaimed by the ContextCleaner once
+    the frame goes out of scope.
     """
     base = _token_arrays(docs)
     n = F.size("toks")
@@ -84,24 +86,17 @@ def cooccurrence_pmi(
     pairs = base.select(
         F.explode(F.concat(*pair_arrays)).alias("pair")
     )
-    cp = pairs.groupBy("pair").agg(
-        F.count("*").alias("n_pair")
-    ).localCheckpoint()
+    cp = pairs.groupBy("pair").agg(F.count("*").alias("n_pair"))
     toks = base.select(F.explode("toks").alias("w"))
     cu = toks.groupBy("w").agg(F.count("*").alias("cw")).localCheckpoint()
 
-    # Integer identities over the cached count tables: total pair
-    # slots Σ_docs Σ_j max(n-j, 0) == SUM(n_pair) over the UNFILTERED
-    # pair counts, total tokens Σ_docs n == SUM(cw) — same integers,
-    # so the cast-to-double totals are bit-identical to the previous
-    # array-size scan, with no third corpus parse. localCheckpoint,
-    # not persist: CacheManager matches persists by canonicalized
-    # plan, so a persisted count table would silently serve CACHED
-    # results to a later identical call (e.g. the bench's n=3 loop) —
-    # the eager per-call materialization re-executes every invocation.
-    totals = cp.agg(F.sum("n_pair").cast("double").alias("tp")).crossJoin(
-        cu.agg(F.sum("cw").cast("double").alias("tt"))
+    n_pairs_per_doc = sum(
+        [F.greatest(n - j, F.lit(0)) for j in range(1, window + 1)],
+        F.lit(0),
     )
+    totals = base.agg(
+        F.sum(n_pairs_per_doc).cast("double").alias("tp")
+    ).crossJoin(cu.agg(F.sum("cw").cast("double").alias("tt")))
 
     scored = (
         cp.filter(F.col("n_pair") >= min_pair)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ad_data_pipelines_spark.functions.hashing import MERSENNE_31, portable_hash64
+from ad_data_pipelines_spark.sources.local import local_frame
 
 #: (a, b) universal-hash constants for the 16 minhash permutations.
 #: Fixed so signatures are stable across runs and engines.
@@ -972,8 +973,8 @@ def connected_components(
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         nodes = {x for r in pair_rows for x in (r.u, r.v)}
-        spark = edges.sparkSession
-        return spark.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             [(n, find(n)) for n in sorted(nodes)],
             schema=pairs.select(
                 F.col("u").alias("doc_id"), F.col("v").alias("component")

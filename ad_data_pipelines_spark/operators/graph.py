@@ -54,6 +54,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ad_data_pipelines_spark.sources.local import local_frame
+
 
 def _cut(df: DataFrame, reliable: bool) -> DataFrame:
     """One lineage cut for the iterative operators.
@@ -251,9 +253,9 @@ def pagerank(
     must be the UNFILTERED artifact the node set was built from (a
     caller filtering the edge list the way g14 does must recompute).
     ``debug_vouch=True`` re-verifies the vouch at call time (count
-    equality + endpoint containment, two extra actions) and raises
-    loudly on a mismatch — run it once when wiring a new consumer,
-    leave it off in production."""
+    equality + endpoint containment both ways, three extra actions)
+    and raises loudly on a mismatch — run it once when wiring a new
+    consumer, leave it off in production."""
     if not 0 < damping_pct < 100:
         raise ValueError(f"damping_pct must be in (0, 100), got {damping_pct}")
     if iterations < 1:
@@ -372,7 +374,7 @@ def pagerank(
         if debug_vouch:
             # opt-in loud-failure re-check of the vouching contract
             # (r15, per the r14 advice): a wrong vouch otherwise
-            # silently misranks. Two bounded actions over cut frames.
+            # silently misranks. Three bounded actions over cut frames.
             actual = nodes.count()
             if n != actual:
                 raise ValueError(
@@ -380,12 +382,11 @@ def pagerank(
                     f"({actual}) — the vouch is stale or was computed "
                     "on different edges"
                 )
+            endpoints = e.select(F.col("src").alias("node")).unionByName(
+                e.select(F.col("dst").alias("node"))
+            )
             stray = (
-                e.select(F.col("src").alias("node"))
-                .unionByName(e.select(F.col("dst").alias("node")))
-                .join(nodes, "node", "left_anti")
-                .limit(1)
-                .collect()
+                endpoints.join(nodes, "node", "left_anti").limit(1).collect()
             )
             if stray:
                 raise ValueError(
@@ -393,17 +394,30 @@ def pagerank(
                     "the vouched nodes frame — the edges are not the "
                     "unfiltered artifact the node set was built from"
                 )
+            # the reverse direction: a node set built from unfiltered
+            # edges and passed with filtered ones over-splits teleport
+            # mass across nodes no surviving edge touches
+            extra = (
+                nodes.join(endpoints, "node", "left_anti").limit(1).collect()
+            )
+            if extra:
+                raise ValueError(
+                    f"vouched node {extra[0][0]!r} is not an endpoint of "
+                    "any edge — the node set was built from other (e.g. "
+                    "unfiltered) edges than the ones passed"
+                )
     if n == 0:
         # the node set is the endpoints of SURVIVING edges — an input of
         # only self-loops/NULLs ranks nothing, it has no graph
-        spark = edges.sparkSession
-        return spark.createDataFrame(
-            [], StructType(
+        return local_frame(
+            edges.sparkSession,
+            [],
+            StructType(
                 [
                     StructField("node", edges.schema[src].dataType),
                     StructField("rank_fp", LongType()),
                 ]
-            )
+            ),
         )
     # flags: (node, is_seed ∈ {0, 1}), checkpointed once. Uniform mode
     # marks every node a seed — the seeded recurrence then reduces to
@@ -2016,8 +2030,8 @@ def hits(
     else:
         n_nodes, n_src = int(n_nodes), int(n_src)
     if n_src == 0:
-        spark = edges.sparkSession
-        return spark.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             [],
             StructType(
                 [

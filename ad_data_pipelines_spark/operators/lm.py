@@ -29,6 +29,8 @@ scored output (inner-join semantics, mirrored by the oracle).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -278,11 +280,24 @@ def perplexity_buckets(
     `bigram_lm_score` output shared with the standalone scoring query
     — the `quality_verdicts(quality=…)` contract: at corpus scale the
     LM scoring pass runs once per corpus generation, not once per
-    consumer.
+    consumer. It must have been scored with this call's `round_dp` (or
+    a coarser one): a sample of its avg_ll values is checked to sit on
+    the 10^-round_dp grid, and a finer-rounded frame raises instead of
+    silently mis-scaling the integer mean.
     """
     scale = 10**round_dp
     if scored is None:
         scored = bigram_lm_score(docs, k=k, round_dp=round_dp)
+    else:
+        for (v,) in scored.select("avg_ll").limit(32).collect():
+            if v is not None and not math.isclose(
+                v * scale, round(v * scale), rel_tol=1e-12, abs_tol=1e-6
+            ):
+                raise ValueError(
+                    f"injected scored avg_ll {v!r} is not rounded to "
+                    f"round_dp={round_dp} places — score it with the "
+                    "same round_dp as perplexity_buckets"
+                )
     langd = scored.join(docs.select("doc_id", "lang"), "doc_id").select(
         "lang",
         "doc_id",

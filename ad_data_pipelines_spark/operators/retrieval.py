@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 # the registry-wide tokenizer contract lives in ONE place
 from ad_data_pipelines_spark.operators.textstats import TOKEN_SEP as _TOKEN_SPLIT
+from ad_data_pipelines_spark.sources.local import local_frame
 
 
 def _validate_bm25(terms, k1: float, b: float) -> list[str]:
@@ -231,8 +232,8 @@ def bm25_batch_topk(
         raise ValueError("bm25_batch_topk: duplicate query_id")
     all_terms = sorted({t for _, ts in queries for t in ts})
     _validate_bm25(all_terms, k1, b)
-    spark = docs.sparkSession
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        docs.sparkSession,
         [(q, t) for q, ts in queries for t in dict.fromkeys(ts)],
         "query_id bigint, term string",
     )

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ad_data_pipelines_spark.sources.local import local_frame
+
 #: Deterministic pseudo-random hyperplanes (LCG-generated, fixed seed) —
 #: stable across runs/engines so bucket ids are reproducible.
 N_PLANES = 8
@@ -347,8 +349,8 @@ def ivf_train_centroids(
         )
     )
     model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(ds)
-    spark = embeddings.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        embeddings.sparkSession,
         [
             (i, [float(x) for x in c])
             for i, c in enumerate(model.clusterCenters())
@@ -528,8 +530,8 @@ def kmeans_fp(
         .collect()
     }
     vq.unpersist()
-    spark = embeddings.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        embeddings.sparkSession,
         [(j, counts.get(j, 0), cents[j]) for j in range(n_cells)],
         "cell_id bigint, n_members bigint, centroid_fp array<bigint>",
     )
@@ -622,9 +624,10 @@ def kcenter_seeds(
         chosen.append(list(best.v))
         chosen_ids.append(int(best.vid))
     vq.unpersist()
-    spark = embeddings.sparkSession
-    return spark.createDataFrame(
-        picks, "cell_id bigint, vec_id bigint, min_dist_fp bigint"
+    return local_frame(
+        embeddings.sparkSession,
+        picks,
+        "cell_id bigint, vec_id bigint, min_dist_fp bigint",
     )
 
 

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ad_data_pipelines_spark.functions.hashing import portable_hash64
+from ad_data_pipelines_spark.sources.local import local_frame
 
 
 def _bucket(key: F.Column, row: int, width: int) -> F.Column:
@@ -285,8 +286,7 @@ def histogram_union_quantiles(
         F.sum("n").over(w_cum).alias("cum"),
         F.sum("n").over(w_tot).cast("bigint").alias("n_values"),
     )
-    spark = shards.sparkSession
-    spine = spark.createDataFrame([(p,) for p in ps], "prob double")
+    spine = local_frame(shards.sparkSession, [(p,) for p in ps], "prob double")
     lo = F.element_at(F.array(*[F.lit(b) for b in bs[:-1]]), F.col("bin") + 1)
     hi = F.element_at(F.array(*[F.lit(b) for b in bs[1:]]), F.col("bin") + 1)
     target = F.col("prob") * F.col("n_values")

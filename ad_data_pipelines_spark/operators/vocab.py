@@ -34,6 +34,7 @@ OOV_ID = 0
 from ad_data_pipelines_spark.operators.textstats import (  # noqa: E402
     TOKEN_SEP as _TOKEN_SPLIT,
 )
+from ad_data_pipelines_spark.sources.local import local_frame  # noqa: E402
 
 
 def _tokens(docs: DataFrame, with_pos: bool = False) -> DataFrame:
@@ -113,9 +114,10 @@ def vocab_coverage(
         .alias("cum"),
     )
     total = counts.agg(F.sum("n").alias("t"))
-    spark = docs.sparkSession
-    sizes_df = spark.createDataFrame(
-        [(int(s),) for s in sorted(set(sizes))], "vocab_size bigint"
+    sizes_df = local_frame(
+        docs.sparkSession,
+        [(int(s),) for s in sorted(set(sizes))],
+        "vocab_size bigint",
     )
     return (
         ranked.join(

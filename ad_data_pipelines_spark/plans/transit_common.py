@@ -43,7 +43,10 @@ def maybe_broadcast(df: DataFrame) -> DataFrame:
     Use ``F.broadcast()`` only for frames bounded by the SCHEMA
     (nation/region, 1-row scalars, boundary/offset tables, VDV-style
     dims), never frames bounded only by the current scale factor.
-    tests/test_plan_hygiene.py enforces this mechanically.
+    tests/test_plan_hygiene.py enforces this mechanically. The
+    driver-parsed dims (VDV, Excel, GeoJSON; `sources.local.local_frame`)
+    are ``LocalRelation``s with exact size statistics, so static
+    planning and AQE see their true size with or without a hint.
     """
     return df
 

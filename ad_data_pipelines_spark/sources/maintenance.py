@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ad_data_pipelines_spark.sources.local import local_frame
+
 DEFAULT_TARGET_BYTES = 128 << 20  # one HDFS-ish block per file
 
 
@@ -120,13 +122,14 @@ def compact_partitions(
             clause = clause & (F.col(c).cast("string") == F.lit(r[c]))
         pred = clause if pred is None else (pred | clause)
     df = spark.read.parquet(path).filter(pred)
-    kmap = spark.createDataFrame(
+    kmap = local_frame(
+        spark,
         [
             tuple(r[c] for c in pcols)
             + (max(1, math.ceil(r["bytes"] / target_file_bytes)),)
             for r in todo
         ],
-        pcols + ["__k"],
+        ", ".join(f"`{c}` string" for c in pcols) + ", __k bigint",
     )
     # join keys arrive as strings from the fs listing — cast df side
     joined = df

@@ -4,7 +4,7 @@ dimensions (S9).
 Reference parity: the reference read a service-type lookup from .xlsx
 (scripts/ads_ridership_…py:19) and region polygons from GeoJSON
 (dwd_bus_route_info_mf & other 2.R:338). Both inputs are KB-sized
-dimensions → parsed driver-side, returned as broadcastable DataFrames
+dimensions → parsed driver-side, returned as `LocalRelation` DataFrames
 (same rationale as the VDV reader, sources/vdv.py).
 
 Excel: pandas.read_excel is used when an engine (openpyxl/xlrd) is
@@ -21,7 +21,11 @@ import re
 import xml.etree.ElementTree as ET
 import zipfile
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from ad_data_pipelines_spark.sources.local import local_frame
 
 _SSML = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _RELS = (
@@ -109,6 +113,21 @@ def _read_xlsx_stdlib(
     return names, dense[header + 1 :]
 
 
+def _excel_type(values: list) -> str:
+    """Spark type of one stdlib-parsed sheet column from its non-NULL
+    cells (a column with none is a string column); mixed types raise,
+    as Spark's own inference would."""
+    kinds = {type(v) for v in values}
+    for kind, spark_type in (
+        (str, "string"), (bool, "boolean"), (int, "bigint"), (float, "double")
+    ):
+        if kinds <= {kind}:
+            return spark_type
+    raise TypeError(
+        f"mixed cell types {sorted(k.__name__ for k in kinds)} in one column"
+    )
+
+
 def read_excel(
     spark: SparkSession, path: str, sheet: str | int = 0, header: int = 0
 ) -> DataFrame:
@@ -119,13 +138,19 @@ def read_excel(
         import pandas as pd
 
         pdf = pd.read_excel(path, sheet_name=sheet, header=header)
-        pdf.columns = [str(c) for c in pdf.columns]
-        return spark.createDataFrame(pdf)
     except ImportError:
-        pass  # no openpyxl/xlrd → stdlib path below
+        pdf = None  # no openpyxl/xlrd → stdlib path below
+    if pdf is not None:
+        pdf.columns = [str(c) for c in pdf.columns]
+        table = pa.Table.from_pandas(pdf, preserve_index=False)
+        return local_frame(
+            spark,
+            zip(*table.to_pydict().values()),
+            from_arrow_schema(table.schema),
+        )
     names, rows = _read_xlsx_stdlib(path, sheet, header)
-    # per-column type unification so Spark's inference never sees a
-    # mixed int/float column (it refuses to merge Long with Double)
+    # per-column type unification: one double column instead of a
+    # mixed int/float one
     for i in range(len(names)):
         vals = [r[i] for r in rows if r[i] is not None]
         if vals and all(isinstance(v, (int, float)) for v in vals) and any(
@@ -135,10 +160,13 @@ def read_excel(
                 if r[i] is not None:
                     r[i] = float(r[i])
     safe = [re.sub(r"[^0-9A-Za-z_]", "_", n) for n in names]
-    if not rows:  # header-only sheet: empty all-string frame
-        schema = ", ".join(f"`{n}` string" for n in safe)
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame([tuple(r) for r in rows], safe)
+    types = [
+        _excel_type([r[i] for r in rows if r[i] is not None])
+        for i in range(len(names))
+    ]
+    return local_frame(
+        spark, rows, ", ".join(f"`{n}` {t}" for n, t in zip(safe, types))
+    )
 
 
 def read_geojson_polygons(
@@ -169,7 +197,9 @@ def read_geojson_polygons(
             continue
         polygons[name] = [(float(x), float(y)) for x, y in ring]
         rows.append((name, gtype, len(ring)))
-    df = spark.createDataFrame(rows, "name string, geom_type string, ring_points int")
+    df = local_frame(
+        spark, rows, "name string, geom_type string, ring_points int"
+    )
     return df, polygons
 
 

@@ -14,10 +14,14 @@ Dialects:
 
 Scale rationale: VDV schedule files are KB-to-MB sized dimension data.
 Parsing happens driver-side (one pass, stdlib only) and the result is a
-`createDataFrame` output intended for `F.broadcast()` in every join —
-shipping a few hundred KB to executors beats a distributed parse of a
-file that fits in L2 cache. (A `spark.read.text`-based distributed
-variant would only matter for GB-scale .x10 files, which do not exist.)
+JVM `LocalRelation` built by `sources.local.local_frame`: the planner
+sees its exact size (so static planning and AQE broadcast it on their
+own, and a `F.broadcast()` hint costs nothing), projections and casts
+over it fold at optimization time, and scanning it starts no Python
+worker. Shipping a few hundred KB to executors beats a distributed
+parse of a file that fits in L2 cache. (A `spark.read.text`-based
+distributed variant would only matter for GB-scale .x10 files, which
+do not exist.)
 """
 
 from __future__ import annotations
@@ -26,7 +30,10 @@ import io
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StringType, StructType
+
+from ad_data_pipelines_spark.sources.local import local_frame
 
 
 @dataclass
@@ -102,7 +109,7 @@ def vdv_to_df(
     schema: StructType | None = None,
     columns: list[str] | None = None,
 ) -> DataFrame:
-    """Materialize a parsed VDV table as a (broadcastable) DataFrame.
+    """Materialize a parsed VDV table as a `LocalRelation` DataFrame.
 
     With `schema`, values are cast column-by-column from their string
     form (empty string → NULL). Without, all columns are strings named
@@ -110,22 +117,23 @@ def vdv_to_df(
     """
     names = columns or table.columns
     if schema is not None:
-        width = len(schema.fields)
-        str_rows = [_conform(r, width) for r in table.rows]
-        sdf = spark.createDataFrame(
-            str_rows, schema=StructType.fromDDL(
-                ", ".join(f"`{f.name}` STRING" for f in schema.fields)
-            )
-        )
-        for f in schema.fields:
-            sdf = sdf.withColumn(f.name, sdf[f.name].cast(f.dataType))
-        return sdf
-    if names is None:
+        names = [f.name for f in schema.fields]
+    elif names is None:
         width = max((len(r) for r in table.rows), default=0)
         names = [f"c{i}" for i in range(width)]
     width = len(names)
-    return spark.createDataFrame(
-        [_conform(r, width) for r in table.rows], schema=names
+    sdf = local_frame(
+        spark,
+        [_conform(r, width) for r in table.rows],
+        StructType([StructField(n, StringType()) for n in names]),
+    )
+    if schema is None:
+        return sdf
+    return sdf.select(
+        *[
+            F.col(f"`{f.name}`").cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ]
     )
 
 

@@ -204,19 +204,21 @@ def main() -> None:
     )
 
     from ad_data_pipelines_spark.plans.testdata_queries import t as load_t
+    from ad_data_pipelines_spark.sources.local import local_frame
 
     t0 = time.perf_counter()
     events = load_t(spark, sf_dir, "events")
     legs = afc_legs_from_events(events).localCheckpoint()
     sales = sales_from_events(events).localCheckpoint()
     legs_build = round(time.perf_counter() - t0, 4)
-    line_dim = spark.createDataFrame(
+    line_dim = local_frame(
+        spark,
         [(1, 10 + i, f"R{i}", 11 if i < 2 else 22, f"Route {i}")
          for i in range(4)],
         VDV_LINE,
     )
-    opdep_dim = spark.createDataFrame(
-        [(11, "AD-X"), (22, "ER-Y")], VDV_OPERATING_DEPARTMENT
+    opdep_dim = local_frame(
+        spark, [(11, "AD-X"), (22, "ER-Y")], VDV_OPERATING_DEPARTMENT
     )
     # day-type calendar spanning the events range (weekend = Sat/Sun)
     avm_dim = spark.sql(
@@ -224,7 +226,8 @@ def main() -> None:
         "ELSE 'weekday' END AS DAY_TYPE FROM (SELECT "
         "explode(sequence(DATE'2020-01-01', DATE'2029-12-31')) AS d)"
     )
-    svc_dim = spark.createDataFrame(
+    svc_dim = local_frame(
+        spark,
         [("R0", "Abu Dhabi", "Local"), ("R1", "Abu Dhabi", "Regional"),
          ("R2", "Al Ain", "Local"), ("R3", "Al Dhafra", "Regional")],
         "Route string, Region string, ServiceType string",

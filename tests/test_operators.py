@@ -1751,6 +1751,34 @@ def test_perplexity_buckets_structure(spark):
     assert len(zz) == 1 and zz[0].bucket == "head" and zz[0].n_docs == 3
 
 
+def test_perplexity_buckets_rejects_scores_at_another_round_dp(spark):
+    """An injected `scored=` frame must be on the call's round_dp grid:
+    scores from the same round_dp are accepted and match the
+    self-scored report, scores rounded to more places raise instead of
+    silently mis-scaling the exact-integer mean."""
+    import pytest
+
+    from ad_data_pipelines_spark.operators import lm
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a b a b a b", "en"),
+            (2, "a b c d", "en"),
+            (3, "e f g h e f", "en"),
+            (4, "x y x y", "zz"),
+        ],
+        "doc_id bigint, text string, lang string",
+    )
+    own = sorted(map(tuple, lm.perplexity_buckets(docs).collect()))
+    same_dp = lm.bigram_lm_score(docs, round_dp=4)
+    assert own == sorted(
+        map(tuple, lm.perplexity_buckets(docs, scored=same_dp).collect())
+    )
+    finer = lm.bigram_lm_score(docs, round_dp=6)
+    with pytest.raises(ValueError, match="round_dp=4"):
+        lm.perplexity_buckets(docs, round_dp=4, scored=finer)
+
+
 def test_tfidf_keywords_discriminative_terms(spark):
     """A term unique to one group gets idf=ln(n_groups); a term in all
     groups gets tfidf 0; top-k and deterministic tie order hold."""
@@ -3911,9 +3939,10 @@ def test_pagerank_assume_normalized_bit_equal(spark):
 def test_pagerank_node_vouch_debug_guard(spark):
     """The nodes=/n_nodes= vouching contract's opt-in re-check
     (debug_vouch=True): a correct vouch ranks bit-equal to the
-    self-computed node set; a stale n_nodes and a node frame missing
-    an edge endpoint both raise loudly instead of silently misranking
-    (teleport mass splits by n_nodes)."""
+    self-computed node set; a stale n_nodes, a node frame missing an
+    edge endpoint and a node frame holding nodes no edge touches all
+    raise loudly instead of silently misranking (teleport mass splits
+    by n_nodes)."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -3953,6 +3982,14 @@ def test_pagerank_node_vouch_debug_guard(spark):
             nodes=partial,
             n_nodes=partial.count(),
             debug_vouch=True,
+        )
+    # the g14-style misuse: nodes vouched from the unfiltered edges,
+    # passed with a filtered edge list — a strict superset of its
+    # endpoints, with a count that matches the frame
+    filtered = e.filter(F.col("src") != 0).localCheckpoint()
+    with pytest.raises(ValueError, match="not an endpoint"):
+        graph.pagerank(
+            filtered, iterations=4, nodes=nodes, n_nodes=n, debug_vouch=True
         )
 
 
